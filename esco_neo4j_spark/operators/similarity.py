@@ -47,7 +47,7 @@ def _anchor_cosine_pudf(query_vec: Sequence[float]):
     zero-norm => 0/0 = NaN in the kernel, which Arrow's object-dtype
     conversion hands back to Spark as NULL (pandas missing-value
     semantics) — the serve-side CASE twin (sources/ann_index.py
-    `_anchor_score_col`) mirrors that NULL explicitly.
+    `_anchor_score_multi_col`) mirrors that NULL explicitly.
 
     Why this exists (r5 verdict top item): the interpreted HOF chain is
     the one expression Catalyst cannot codegen — it measured 4× slower

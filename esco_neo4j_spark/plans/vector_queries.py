@@ -2965,8 +2965,10 @@ def vec_graph_search_layered_indexed(
     contract (sources/ann_index.py — the IVF-index pattern), rebuilt
     only when the manifest stops matching the corpus footer count /
     algo version / derived parameters; `serve_layered` then runs ONLY
-    the descent + beam walk over the stored graphs — O(entries·degree·
-    layers + beam·rounds·degree) work per query, independent of N.
+    the descent + beam walk over the stored graphs — the one-anchor case
+    of the walk the batched and filtered faces share (`_walk_layered`)
+    — O(entries·degree·layers + beam·rounds·degree) work per query,
+    independent of N.
 
     Output is bit-identical to the inline query (pinned in
     tests/test_ann_index.py), so the shared layered-search oracle
@@ -2995,15 +2997,16 @@ def vec_graph_search_layered_batch(
     """BATCHED serve from the persisted layered index — ``_GS_BATCH``
     anchor queries answered in one lockstep walk with the same number
     of Spark jobs as a single query (sources/ann_index.py
-    `serve_layered_batch`). This is the production shape of "build
-    once, serve many": an ANN index in a training-data pipeline is hit
-    with evaluation/dedup batches, not single queries, and the batched
-    walk shares each round's partition-pruned edge read and one multi-
-    anchor scoring job across the whole batch — the per-round FIXED
-    costs (scheduling, plan analysis) are independent of B; only the
-    union frontier's data volume grows, sublinearly when walks
-    overlap. Measured at sf10, fresh JVM: B=4 in 1.4× the single-serve
-    wall (2.9× throughput), B=16 in 2.2× (7.3×).
+    `serve_layered_batch` — the same `_walk_layered` the single and
+    filtered faces run with one anchor). This is the production shape
+    of "build once, serve many": an ANN index in a training-data
+    pipeline is hit with evaluation/dedup batches, not single queries,
+    and the batched walk shares each round's partition-pruned edge read
+    and one multi-anchor scoring job across the whole batch — the
+    per-round FIXED costs (scheduling, plan analysis) are independent
+    of B; only the union frontier's data volume grows, sublinearly when
+    walks overlap. Measured at sf10, fresh JVM: B=4 in 1.4× the
+    single-serve wall (2.9× throughput), B=16 in 2.2× (7.3×).
 
     Anchors are the _GS_BATCH lowest-id stored vectors; anchor 0 is
     vec_id 0, the single search's anchor, so per-aid output is
@@ -3039,7 +3042,8 @@ def vec_graph_search_layered_filtered(
     ranking over the visited set's stored label metadata, which the
     index carries as a payload column precisely so filtered serves
     never join back to the corpus (sources/ann_index.py
-    `serve_layered(label_filter=…)`).
+    `serve_layered(label_filter=…)`: the one-anchor `_walk_layered`,
+    the same walk the plain and batched faces run).
 
     Post-filter-over-navigation trades recall for graph connectivity:
     it can return fewer than k rows when the walk visited fewer than k

@@ -27,10 +27,13 @@ store has:
   under the crash-safe rename contract (sources/merge.py — the same
   swap cli.py's translate and the IVF index use; `recover_swap` runs at
   every entry) with ``_MANIFEST.json`` pinning the full derivation.
-- **serve** (`serve_layered`): the registered
-  ``vec_graph_search_layered_indexed`` face — descend the STORED coarse
-  layers, then walk the stored base graph, touching ONLY the partitions
-  the frontier hashes into. The walk state (visited ids + scores) is
+- **serve** (`serve_layered`, `serve_layered_batch`): ONE walk,
+  `_walk_layered`, serves the registered
+  ``vec_graph_search_layered_{indexed,filtered,batch}`` faces — a single
+  (optionally label-filtered) query is its one-anchor case, a batch
+  runs B anchors in lockstep. It descends the STORED coarse layers,
+  then walks the stored base graph, touching ONLY the partitions the
+  frontier hashes into. The walk state (visited ids + scores) is
   bounded by construction INDEPENDENT of corpus size — top layer holds
   [_GS_LAYER_MIN, M·_GS_LAYER_MIN) nodes by the _gs_strides stop rule,
   every later frontier is ≤ max(entries, beam) ids and every expansion
@@ -489,15 +492,17 @@ def load_layer(
     )
 
 
-def _pruned_edges(
+def _pruned_src_edges(
     spark: SparkSession, ix: _IndexHandle, stride: int, ids: list[int]
 ):
-    """One layer's out-edges of ``ids``, reading only the hash buckets
-    the ids land in: the file manifest resolves ``stride``/``pbucket``
-    to explicit file paths (no directory LIST at all — r11), and the
-    same literal IN lists stay on the scan as PartitionFilters (pinned
-    in tests/test_ann_index.py), so the read is O(|ids| · N/nb) instead
-    of O(N·degree)."""
+    """One layer's (src, nbr) out-edges of ``ids``, reading only the
+    hash buckets the ids land in: the file manifest resolves
+    ``stride``/``pbucket`` to explicit file paths (no directory LIST at
+    all — r11), and the same literal IN lists stay on the scan as
+    PartitionFilters (pinned in tests/test_ann_index.py), so the read is
+    O(|ids| · N/nb) instead of O(N·degree). The walk reads ONE
+    union-of-frontiers edge set per round and routes each edge back to
+    the anchors whose frontier contains its src."""
     nb = ix.manifest["nb"]
     buckets = sorted({_bucket_py(i, nb) for i in ids})
     parts = [
@@ -510,35 +515,7 @@ def _pruned_edges(
             & F.col("pbucket").isin(buckets)
             & F.col("src").isin(ids)
         )
-        .select("nbr")
-    )
-
-
-def _anchor_score_col(anchor: list[float]):
-    """The serve-side scoring expression: the pure-JVM
-    ``cosine_similarity`` HOF chain (bit-pinned against the Arrow
-    scorer, tests/test_similarity.py) wrapped with the Arrow scorer's
-    exact NULL contract — any non-finite stored element scores NULL
-    (the pudf masks those rows), and so does a finite zero-norm vector
-    — the pudf computes 0/0 = NaN but Arrow's object-dtype conversion
-    maps NaN to null on the way back (pandas missing-value semantics;
-    verified empirically against the pudf in tests/test_ann_index.py),
-    and spelling it as a CASE arm also keeps ANSI mode from erroring
-    the chain's division. A null element needs no CASE arm: it poisons
-    the fold to NULL on the chain exactly as the pudf returns None for
-    it (a null element also nulls both predicates, falling through to
-    the chain)."""
-    from esco_neo4j_spark.functions.vector import cosine_similarity, l2_norm
-
-    emb = F.col("embedding")
-    null_score = F.exists(
-        emb, lambda x: F.isnan(x) | (F.abs(x) == F.lit(float("inf")))
-    ) | (l2_norm(emb) == F.lit(0.0))
-    return F.round(
-        F.when(null_score, F.lit(None).cast("double")).otherwise(
-            cosine_similarity(emb, anchor)
-        ),
-        6,
+        .select("src", "nbr")
     )
 
 
@@ -556,25 +533,76 @@ def _pruned_vectors(
     )
 
 
-def _score_ids(
+def _anchor_score_multi_col(anchors: list[tuple[int, list[float]]]):
+    """The serve-side scoring expression against B anchors as ONE
+    array<double> column (element j = anchor j's score): ``transform``
+    over an array-of-anchors literal applies the pure-JVM
+    ``cosine_similarity`` HOF chain (bit-pinned against the Arrow
+    scorer, tests/test_similarity.py) wrapped with the Arrow scorer's
+    exact NULL contract — any non-finite stored element scores NULL
+    (the pudf masks those rows), and so does a finite zero-norm vector
+    — the pudf computes 0/0 = NaN but Arrow's object-dtype conversion
+    maps NaN to null on the way back (pandas missing-value semantics;
+    verified empirically against the pudf in tests/test_ann_index.py),
+    and spelling it as a CASE arm also keeps ANSI mode from erroring
+    the chain's division. A null element needs no CASE arm: it poisons
+    the fold to NULL on the chain exactly as the pudf returns None for
+    it (a null element also nulls both predicates, falling through to
+    the chain).
+
+    One copy of the chain in the expression tree instead of B — B
+    separate single-anchor columns measured ~1.5s of per-job analysis
+    overhead at B=4 (vs ~0.6s for one chain), and the per-element
+    lambda keeps the tree size O(B·dim literals + 1 chain), so batch
+    width scales without growing the plan."""
+    from esco_neo4j_spark.functions.vector import cosine_similarity, l2_norm
+
+    emb = F.col("embedding")
+    null_score = F.exists(
+        emb, lambda x: F.isnan(x) | (F.abs(x) == F.lit(float("inf")))
+    ) | (l2_norm(emb) == F.lit(0.0))
+    avecs = F.array(
+        *[
+            F.array(*[F.lit(float(x)) for x in vec]).cast(
+                "array<double>"
+            )
+            for _, vec in anchors
+        ]
+    )
+    return F.transform(
+        avecs,
+        lambda a: F.round(
+            F.when(null_score, F.lit(None).cast("double")).otherwise(
+                cosine_similarity(emb, a)
+            ),
+            6,
+        ),
+    )
+
+
+def _score_ids_multi(
     spark: SparkSession,
     ix: _IndexHandle,
-    anchor: list[float],
+    anchors: list[tuple[int, list[float]]],
     ids: list[int],
-) -> dict[int, float | None]:
-    """Exact anchor-cosine scores for ``ids`` from the stored vector
-    table — pruned via `_pruned_vectors`, scored by the JVM HOF chain
-    and 6dp-rounded JVM-side like every other scoring site. Ids without
-    a stored vector (null embedding in the corpus) are simply absent,
+) -> dict[int, list[float | None]]:
+    """Exact anchor-cosine scores for ``ids`` against B anchors in ONE
+    pruned job: `_pruned_vectors` shares the scan and
+    `_anchor_score_multi_col` scores every anchor in one array column,
+    6dp-rounded JVM-side like every other scoring site. Returns
+    id -> [score per anchor, in ``anchors`` order]; ids without a
+    stored vector (null embedding in the corpus) are simply absent,
     matching the inner join the inline plan does."""
     if not ids:
         return {}
     rows = (
         _pruned_vectors(spark, ix, ids)
-        .select("vec_id", _anchor_score_col(anchor).alias("score"))
+        .select(
+            "vec_id", _anchor_score_multi_col(anchors).alias("s")
+        )
         .collect()
     )
-    return {r["vec_id"]: r["score"] for r in rows}
+    return {r["vec_id"]: list(r["s"]) for r in rows}
 
 
 def _rank_key(item):
@@ -610,295 +638,57 @@ def _open_index(spark: SparkSession, index_dir: str) -> _IndexHandle:
     return _IndexHandle(_layers_path(index_dir), manifest, fm)
 
 
-def serve_layered(
+def _walk_layered(
     spark: SparkSession,
-    sf_dir: str,
-    index_dir: str,
+    ix: _IndexHandle,
+    n_anchors: int,
     label_filter: int | None = None,
-) -> DataFrame:
-    """The SERVE face: layered descent + base beam walk over the STORED
-    graphs — no graph construction and no full-corpus pass anywhere.
+) -> list[tuple[int, list[tuple[int, float | None]]]]:
+    """THE layered walk over the STORED graphs — descent through the
+    coarse layers, then the base beam walk — for the ``n_anchors``
+    lowest-id stored vectors in lockstep. Returns ``(aid, ranked)`` per
+    anchor in id order, ``ranked`` being its top-_GS_K ``(vec_id,
+    score)`` list. A single query is the one-anchor case.
 
-    ``label_filter`` is the FILTERED-search face (the metadata-filtered
-    ANN every production vector store offers): navigation is
-    UNCHANGED — the walk explores the unfiltered graph, because
-    filtering the graph itself would disconnect it under selective
-    predicates — and the predicate applies at the FINAL ranking, over
-    the visited set's stored ``label`` metadata (one extra pruned read
-    of the visited ids; the index carries label precisely so this
-    never joins back to the corpus). Post-filter-over-navigation can
-    underfill k when fewer than k eligible ids were visited — that is
-    the documented trade of filtered graph-ANN (vs the exact pre-filter
-    scan ``vec_filtered_topk`` carries), and the oracle replays the
-    same semantics so underfill is value-checked, not hidden.
-    Mirrors plans/vector_queries.vec_graph_search_layered step for step
-    (same exhaustive top-layer entry, per-layer expand-and-rerank
-    descent, descent-∪-diversity base seeds, same tie-breaking), so its
-    output is bit-identical to the inline query's and the shared DuckDB
-    oracle replays it (pinned in tests/test_ann_index.py).
+    Each anchor runs plans/vector_queries.vec_graph_search_layered's
+    walk step for step (same exhaustive top-layer entry, per-layer
+    expand-and-rerank descent, descent-∪-diversity base seeds, same
+    tie-breaking via `_rank_key`), so the output is bit-identical to the
+    inline query's and the shared DuckDB oracle replays it (pinned in
+    tests/test_ann_index.py). The rounds advance in lockstep: one
+    `_pruned_src_edges` read per round over the UNION of the B
+    frontiers (edges routed back per anchor by src) and one
+    `_score_ids_multi` job per round scoring the union candidate set
+    against all B anchors at once — so B anchors cost the same NUMBER
+    of Spark jobs as one; only the data volume grows with B,
+    sublinearly when walks overlap.
 
     The walk state is bounded INDEPENDENT of corpus size — top layer
     < M·_GS_LAYER_MIN nodes by the _gs_strides stop rule, later
-    frontiers ≤ max(_GS_ENTRIES, beam), expansions ≤ frontier·degree —
-    so ids and scores live driver-side (the repo's bounded-algorithm-
-    state pattern) while every read is a pruned distributed scan of the
-    frontier's hash buckets. The heavy column (the stored vector) never
-    leaves the executors unscored: scoring happens in Spark on the
-    pruned rows and only (id, 6dp score) rows return."""
+    frontiers ≤ max(_GS_ENTRIES, beam), expansions ≤ frontier·degree,
+    times B — so ids and scores live driver-side (the repo's bounded-
+    algorithm-state pattern) while every read is a pruned distributed
+    scan of the frontier's hash buckets. The heavy column (the stored
+    vector) never leaves the executors unscored: scoring happens in
+    Spark on the pruned rows and only (id, 6dp scores) rows return.
+
+    ``label_filter`` leaves navigation unchanged and applies at the
+    final ranking: one `_pruned_vectors` read of the visited ids keeps
+    those whose stored ``label`` matches (see `serve_layered`)."""
     from esco_neo4j_spark.plans.vector_queries import (
         _GS_ENTRIES,
         _GS_K,
         _GS_ROUNDS,
     )
 
-    ix = _open_index(spark, index_dir)
-    manifest = ix.manifest
-    # The anchor (vec_id=0's embedding, plans/vector_queries._anchor_vec)
-    # comes from the index's OWN vectors table — a one-bucket pruned
-    # point lookup instead of a full corpus-table scan. Exactness: the
-    # stored column IS the corpus's array<float> column, so the
-    # collected anchor equals the inline query's to the last bit.
-    row = (
-        _pruned_vectors(spark, ix, [0]).select("embedding").first()
-    )
-    if row is None or row["embedding"] is None:
-        raise ValueError("anchor vec_id=0 has no stored embedding")
-    anchor = list(row["embedding"])
-
-    entries: list[int] | None = None
-    for layer in manifest["layers"]:
-        s = layer["stride"]
-        if s == 1:
-            continue
-        if entries is None:
-            # exhaustive top-layer entry: the stored membership of the
-            # coarsest layer ([32, 256) ids by the stride stop rule)
-            entries = [
-                r["vec_id"]
-                for r in _read_parts(
-                    spark, ix, "members", [f"stride={s}"]
-                )
-                .filter(F.col("stride") == s)
-                .select("vec_id")
-                .collect()
-            ]
-        nbrs = {
-            r["nbr"]
-            for r in _pruned_edges(spark, ix, s, entries).collect()
-        }
-        cand = sorted(set(entries) | nbrs)
-        scored = _score_ids(spark, ix, anchor, cand)
-        entries = [
-            vid
-            for vid, _ in sorted(scored.items(), key=_rank_key)[
-                :_GS_ENTRIES
-            ]
-        ]
-
-    # base seeds: the _GS_ENTRIES lowest non-null-embedding ids — the
-    # same diversity seeds the inline plan takes. The file manifest
-    # stores the lowest _SEED_IDS_STORED stored ids (a pure function of
-    # the corpus), so this is a list slice instead of a full-table
-    # vec_id scan whose listing grew with nb.
-    seeds = ix.seed_ids[:_GS_ENTRIES]
-    entry_ids = sorted(set(seeds) | set(entries or []))
-
-    visited: dict[int, float | None] = _score_ids(
-        spark, ix, anchor, entry_ids
-    )
-    # Per-walk edge memo (r11, guide §2.3 — read each src's adjacency
-    # once): consecutive beams overlap heavily (the best ids stay in the
-    # top beam), so later rounds re-read mostly-known buckets. Remember
-    # each expanded src's neighbor set driver-side (bounded:
-    # ≤ visited·degree ids) and fetch only never-expanded frontier ids.
-    # The graph is static within a serve, so the union of neighbors is
-    # identical to re-reading — values unchanged.
-    edge_nbrs: dict[int, set[int]] = {}
-    for _ in range(_GS_ROUNDS):
-        frontier = [
-            vid
-            for vid, _ in sorted(visited.items(), key=_rank_key)[
-                : manifest["beam"]
-            ]
-        ]
-        miss = [i for i in frontier if i not in edge_nbrs]
-        if miss:
-            fetched: dict[int, set[int]] = {i: set() for i in miss}
-            for r in _pruned_src_edges(spark, ix, 1, miss).collect():
-                fetched[r["src"]].add(r["nbr"])
-            edge_nbrs.update(fetched)
-        nbrs: set[int] = set().union(
-            *(edge_nbrs[i] for i in frontier)
-        )
-        new = sorted(nbrs - visited.keys())
-        visited.update(_score_ids(spark, ix, anchor, new))
-
-    # final ranking driver-side over the bounded visited set, via
-    # `_rank_key` — the EXACT mirror of the window ordering the inline
-    # walk ends with (row_number over desc score / asc vec_id,
-    # operators/similarity.graph_beam_search; NaN above all doubles,
-    # NULL last). A Spark window over ≤ beam·degree·rounds rows costs a
-    # full extra job (~2.3s measured) for work a sort of a list does;
-    # the parity and oracle tests pin that both rankings agree.
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    pool = visited
-    if label_filter is not None:
-        vids = sorted(visited.keys())
-        eligible = {
-            r["vec_id"]
-            for r in _pruned_vectors(spark, ix, vids)
-            .filter(F.col("label") == label_filter)
-            .select("vec_id")
-            .collect()
-        }
-        pool = {
-            vid: s for vid, s in visited.items() if vid in eligible
-        }
-
-    ranked = sorted(pool.items(), key=_rank_key)[:_GS_K]
-    out_schema = StructType(
-        [
-            StructField("vec_id", LongType(), True),
-            StructField("score", DoubleType(), True),
-            StructField("rk", IntegerType(), True),
-        ]
-    )
-    return spark.createDataFrame(
-        [(vid, s, i + 1) for i, (vid, s) in enumerate(ranked)],
-        schema=out_schema,
-    ).orderBy("rk")
-
-
-def _pruned_src_edges(
-    spark: SparkSession, ix: _IndexHandle, stride: int, ids: list[int]
-):
-    """``_pruned_edges`` with the src column kept — the batched serve
-    reads ONE union-of-frontiers edge set per round and routes each
-    edge back to the anchors whose frontier contains its src."""
-    nb = ix.manifest["nb"]
-    buckets = sorted({_bucket_py(i, nb) for i in ids})
-    parts = [
-        os.path.join(f"stride={stride}", f"pbucket={b}") for b in buckets
-    ]
-    return (
-        _read_parts(spark, ix, "graph", parts)
-        .filter(
-            (F.col("stride") == stride)
-            & F.col("pbucket").isin(buckets)
-            & F.col("src").isin(ids)
-        )
-        .select("src", "nbr")
-    )
-
-
-def _anchor_score_multi_col(anchors: list[tuple[int, list[float]]]):
-    """`_anchor_score_col` against B anchors as ONE array<double>
-    column: transform over an array-of-anchors literal, the SAME
-    chain + NULL wrapper applied per element. One copy of the chain in
-    the expression tree instead of B — B separate `_anchor_score_col`
-    columns measured ~1.5s of per-job analysis overhead at B=4 (vs
-    ~0.6s for one chain), and the per-element lambda keeps the tree
-    size O(B·dim literals + 1 chain), so batch width scales without
-    growing the plan. Arithmetic per element is the identical fold
-    over identical doubles, so scores are bit-identical to the
-    single-anchor column (pinned via the batch==single serve test)."""
-    from esco_neo4j_spark.functions.vector import cosine_similarity, l2_norm
-
-    emb = F.col("embedding")
-    null_score = F.exists(
-        emb, lambda x: F.isnan(x) | (F.abs(x) == F.lit(float("inf")))
-    ) | (l2_norm(emb) == F.lit(0.0))
-    avecs = F.array(
-        *[
-            F.array(*[F.lit(float(x)) for x in vec]).cast(
-                "array<double>"
-            )
-            for _, vec in anchors
-        ]
-    )
-    return F.transform(
-        avecs,
-        lambda a: F.round(
-            F.when(null_score, F.lit(None).cast("double")).otherwise(
-                cosine_similarity(emb, a)
-            ),
-            6,
-        ),
-    )
-
-
-def _score_ids_multi(
-    spark: SparkSession,
-    ix: _IndexHandle,
-    anchors: list[tuple[int, list[float]]],
-    ids: list[int],
-) -> dict[int, list[float | None]]:
-    """``_score_ids`` against B anchors in ONE pruned job: the scan is
-    shared and `_anchor_score_multi_col` scores every anchor in one
-    array column (identical arithmetic to the single-anchor serve, so
-    per-anchor values are bit-identical to B independent serves).
-    Returns id -> [score per anchor, in ``anchors`` order]."""
-    if not ids:
-        return {}
-    rows = (
-        _pruned_vectors(spark, ix, ids)
-        .select(
-            "vec_id", _anchor_score_multi_col(anchors).alias("s")
-        )
-        .collect()
-    )
-    return {r["vec_id"]: list(r["s"]) for r in rows}
-
-
-def serve_layered_batch(
-    spark: SparkSession,
-    sf_dir: str,
-    index_dir: str,
-    n_anchors: int,
-) -> DataFrame:
-    """BATCHED serve — ``n_anchors`` queries answered in ONE walk over
-    the stored index, with the same NUMBER of Spark jobs as a single
-    query. "Build once, serve many" made literal: a training-data
-    pipeline evaluates ANN queries in batches, and the per-round fixed
-    costs of the single serve (job scheduling, plan analysis, pruned-
-    scan setup) are shared across the whole batch; only the data
-    volume (union of frontiers/candidates) grows with B, sublinearly
-    when anchors' walks overlap. Measured at sf10 (fresh JVM): B=4 in
-    1.4× the single-serve wall (2.9× throughput), B=16 in 2.2×
-    (7.3× throughput).
-
-    Anchors are the ``n_anchors`` lowest-id stored vectors (anchor 0 is
-    vec_id 0 — the single serve's anchor, so the batch strictly extends
-    it; pinned in tests/test_ann_index.py). Each anchor runs the EXACT
-    single-serve walk — shared exhaustive top-layer entry, per-layer
-    expand-and-rerank, descent-∪-diversity seeds, `_rank_key` ordering
-    — but the rounds advance in lockstep: one `_pruned_src_edges` read
-    per round over the UNION of the B frontiers (edges routed back per
-    anchor by src), one `_score_ids_multi` job per round scoring the
-    union candidate set against all B anchors at once. Driver state is
-    B × the single serve's bounded walk state. Output adds an ``aid``
-    (anchor vec_id) column; per-aid rows are bit-identical to B single
-    serves by construction, which is what lets the DuckDB oracle replay
-    the batch as B independent descents over the same stored graphs."""
-    from esco_neo4j_spark.plans.vector_queries import (
-        _GS_ENTRIES,
-        _GS_K,
-        _GS_ROUNDS,
-    )
-
-    ix = _open_index(spark, index_dir)
     manifest = ix.manifest
     # anchors = the n_anchors lowest stored ids — a slice of the file
-    # manifest's seed_ids plus a pruned embedding fetch, not a
-    # full-table orderBy scan (fallback to the scan only if the request
-    # exceeds the stored id list, which the registered faces never do)
+    # manifest's seed_ids plus a pruned point lookup in the index's OWN
+    # vectors table, not a full-table orderBy scan (fallback to the scan
+    # only if the request exceeds the stored id list, which the
+    # registered faces never do). The stored column IS the corpus's
+    # array<float> column, so each anchor equals the inline query's to
+    # the last bit.
     if n_anchors <= len(ix.seed_ids):
         aids = ix.seed_ids[:n_anchors]
         arows = (
@@ -918,17 +708,17 @@ def serve_layered_batch(
             .collect()
         ]
     if not anchors:
-        raise ValueError("no stored vectors to anchor the batch on")
+        raise ValueError("no stored vectors to anchor the walk on")
     B = len(anchors)
 
-    # Per-walk memos (r11, guide §2.3): B anchors' walks converge on the
-    # same hub region, so the union frontier/candidate sets of later
-    # rounds are mostly ids some anchor already visited. An id's edge
-    # set and its B-anchor score vector are deterministic within a
-    # serve, so remember both driver-side (bounded: ≤ visited·degree
-    # ids × B scores) and fetch only genuinely-new ids each round —
-    # this is what pushes large-B batch wall toward flat instead of
-    # re-reading/re-scoring the shared hubs every round.
+    # Per-walk memos (r11, guide §2.3 — read each src's adjacency once):
+    # consecutive beams overlap heavily (the best ids stay in the top
+    # beam) and B anchors' walks converge on the same hub region, so the
+    # union frontier/candidate sets of later rounds are mostly ids
+    # already seen. An id's edge set and its B-anchor score vector are
+    # deterministic within a serve, so remember both driver-side
+    # (bounded: ≤ visited·degree ids × B scores) and fetch only
+    # genuinely-new ids each round — values are unchanged.
     _absent = object()
     score_memo: dict[int, object] = {}
 
@@ -938,11 +728,7 @@ def serve_layered_batch(
             got = _score_ids_multi(spark, ix, anchors, miss)
             for i in miss:
                 score_memo[i] = got.get(i, _absent)
-        return {
-            i: score_memo[i]
-            for i in ids
-            if score_memo[i] is not _absent
-        }
+        return {i: score_memo[i] for i in ids if score_memo[i] is not _absent}
 
     edge_memo: dict[int, set[int]] = {}
 
@@ -953,7 +739,13 @@ def serve_layered_batch(
             for r in _pruned_src_edges(spark, ix, 1, miss).collect():
                 fetched[r["src"]].add(r["nbr"])
             edge_memo.update(fetched)
-        return edge_memo
+        return {i: edge_memo[i] for i in ids}
+
+    def _union(id_sets) -> list[int]:
+        return sorted(set().union(*id_sets))
+
+    def _top(items, k: int) -> list[int]:
+        return [vid for vid, _ in sorted(items, key=_rank_key)[:k]]
 
     entries: list[list[int]] | None = None
     for layer in manifest["layers"]:
@@ -961,116 +753,142 @@ def serve_layered_batch(
         if s == 1:
             continue
         if entries is None:
+            # exhaustive top-layer entry: the stored membership of the
+            # coarsest layer ([32, 256) ids by the stride stop rule)
             top = [
                 r["vec_id"]
-                for r in _read_parts(
-                    spark, ix, "members", [f"stride={s}"]
-                )
+                for r in _read_parts(spark, ix, "members", [f"stride={s}"])
                 .filter(F.col("stride") == s)
                 .select("vec_id")
                 .collect()
             ]
             entries = [list(top) for _ in range(B)]
-        union_entries = sorted(set().union(*map(set, entries)))
         src_nbrs: dict[int, set[int]] = {}
-        for r in _pruned_src_edges(
-            spark, ix, s, union_entries
-        ).collect():
+        for r in _pruned_src_edges(spark, ix, s, _union(entries)).collect():
             src_nbrs.setdefault(r["src"], set()).add(r["nbr"])
         cands = [
-            sorted(
-                set(e)
-                | set().union(
-                    *(src_nbrs.get(i, set()) for i in e)
-                )
-            )
+            set(e).union(*(src_nbrs.get(i, set()) for i in e))
             for e in entries
         ]
-        union_cand = sorted(set().union(*map(set, cands)))
-        scored = _scores_for(union_cand)
+        scored = _scores_for(_union(cands))
         entries = [
-            [
-                vid
-                for vid, _ in sorted(
-                    (
-                        (vid, scored[vid][j])
-                        for vid in cands[j]
-                        if vid in scored
-                    ),
-                    key=_rank_key,
-                )[:_GS_ENTRIES]
-            ]
-            for j in range(B)
+            _top(((v, scored[v][j]) for v in c if v in scored), _GS_ENTRIES)
+            for j, c in enumerate(cands)
         ]
 
+    # base seeds: the _GS_ENTRIES lowest non-null-embedding ids — the
+    # same diversity seeds the inline plan takes, sliced from the file
+    # manifest's stored lowest ids instead of a full-table vec_id scan
     seeds = ix.seed_ids[:_GS_ENTRIES]
-    entry_ids = [
-        sorted(set(seeds) | set(e)) for e in (entries or [[]] * B)
-    ]
-    union_entry = sorted(set().union(*map(set, entry_ids)))
-    entry_scores = _scores_for(union_entry)
+    entry_ids = [set(seeds).union(e) for e in (entries or [[]] * B)]
+    entry_scores = _scores_for(_union(entry_ids))
     visited: list[dict[int, float | None]] = [
-        {
-            vid: entry_scores[vid][j]
-            for vid in entry_ids[j]
-            if vid in entry_scores
-        }
-        for j in range(B)
+        {v: entry_scores[v][j] for v in e if v in entry_scores}
+        for j, e in enumerate(entry_ids)
     ]
     for _ in range(_GS_ROUNDS):
-        frontiers = [
-            [
-                vid
-                for vid, _ in sorted(v.items(), key=_rank_key)[
-                    : manifest["beam"]
-                ]
-            ]
+        frontiers = [_top(v.items(), manifest["beam"]) for v in visited]
+        src_nbrs = _base_nbrs(_union(frontiers))
+        news = [
+            set().union(*(src_nbrs[i] for i in f)) - v.keys()
+            for f, v in zip(frontiers, visited)
+        ]
+        new_scores = _scores_for(_union(news))
+        for j, (new, v) in enumerate(zip(news, visited)):
+            v.update({i: new_scores[i][j] for i in new if i in new_scores})
+
+    if label_filter is not None:
+        eligible = {
+            r["vec_id"]
+            for r in _pruned_vectors(spark, ix, _union(visited))
+            .filter(F.col("label") == label_filter)
+            .select("vec_id")
+            .collect()
+        }
+        visited = [
+            {vid: s for vid, s in v.items() if vid in eligible}
             for v in visited
         ]
-        union_frontier = sorted(set().union(*map(set, frontiers)))
-        src_nbrs = _base_nbrs(union_frontier)
-        news = [
-            sorted(
-                set().union(
-                    *(src_nbrs.get(i, set()) for i in frontiers[j])
-                )
-                - visited[j].keys()
-            )
-            for j in range(B)
-        ]
-        union_new = sorted(set().union(*map(set, news)))
-        new_scores = _scores_for(union_new)
-        for j in range(B):
-            visited[j].update(
-                {
-                    vid: new_scores[vid][j]
-                    for vid in news[j]
-                    if vid in new_scores
-                }
-            )
 
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    # final ranking driver-side over the bounded visited sets, via
+    # `_rank_key` — the EXACT mirror of the window ordering the inline
+    # walk ends with (row_number over desc score / asc vec_id,
+    # operators/similarity.graph_beam_search; NaN above all doubles,
+    # NULL last). A Spark window over ≤ beam·degree·rounds rows costs a
+    # full extra job (~2.3s measured) for work a sort of a list does;
+    # the parity and oracle tests pin that both rankings agree.
+    return [
+        (aid, sorted(v.items(), key=_rank_key)[:_GS_K])
+        for (aid, _), v in zip(anchors, visited)
+    ]
 
-    out_schema = StructType(
+
+def serve_layered(
+    spark: SparkSession,
+    sf_dir: str,
+    index_dir: str,
+    label_filter: int | None = None,
+) -> DataFrame:
+    """The SERVE face: one query — the anchor is vec_id 0's embedding,
+    plans/vector_queries._anchor_vec — answered by `_walk_layered` over
+    the STORED graphs, with no graph construction and no full-corpus
+    pass anywhere. Output ``(vec_id, score, rk)`` is bit-identical to
+    the inline ``vec_graph_search_layered`` query's (pinned in
+    tests/test_ann_index.py).
+
+    ``label_filter`` is the FILTERED-search face (the metadata-filtered
+    ANN every production vector store offers): navigation is
+    UNCHANGED — the walk explores the unfiltered graph, because
+    filtering the graph itself would disconnect it under selective
+    predicates — and the predicate applies at the FINAL ranking, over
+    the visited set's stored ``label`` metadata (one extra pruned read
+    of the visited ids; the index carries label precisely so this
+    never joins back to the corpus). Post-filter-over-navigation can
+    underfill k when fewer than k eligible ids were visited — that is
+    the documented trade of filtered graph-ANN (vs the exact pre-filter
+    scan ``vec_filtered_topk`` carries), and the oracle replays the
+    same semantics so underfill is value-checked, not hidden."""
+    ix = _open_index(spark, index_dir)
+    # seed_ids are the lowest stored ids and only non-null embeddings
+    # are stored, so vec_id 0 anchors the walk iff it leads them
+    if not ix.seed_ids or ix.seed_ids[0] != 0:
+        raise ValueError("anchor vec_id=0 has no stored embedding")
+    [(_, ranked)] = _walk_layered(spark, ix, 1, label_filter)
+    return spark.createDataFrame(
+        [(vid, s, i + 1) for i, (vid, s) in enumerate(ranked)],
+        schema="vec_id bigint, score double, rk int",
+    ).orderBy("rk")
+
+
+def serve_layered_batch(
+    spark: SparkSession,
+    sf_dir: str,
+    index_dir: str,
+    n_anchors: int,
+) -> DataFrame:
+    """BATCHED serve — ``n_anchors`` queries answered in ONE
+    `_walk_layered` over the stored index, with the same NUMBER of Spark
+    jobs as a single query. "Build once, serve many" made literal: a
+    training-data pipeline evaluates ANN queries in batches, and the
+    per-round fixed costs (job scheduling, plan analysis, pruned-scan
+    setup) are shared across the whole batch; only the data volume
+    (union of frontiers/candidates) grows with B, sublinearly when
+    anchors' walks overlap. Measured at sf10 (fresh JVM): B=4 in 1.4×
+    the single-serve wall (2.9× throughput), B=16 in 2.2× (7.3×
+    throughput).
+
+    Anchors are the ``n_anchors`` lowest-id stored vectors (anchor 0 is
+    vec_id 0 — the single serve's anchor, so the batch strictly extends
+    it; pinned in tests/test_ann_index.py). Output adds an ``aid``
+    (anchor vec_id) column; per-aid rows are bit-identical to B single
+    walks by construction, which is what lets the DuckDB oracle replay
+    the batch as B independent descents over the same stored graphs."""
+    ix = _open_index(spark, index_dir)
+    return spark.createDataFrame(
         [
-            StructField("aid", LongType(), True),
-            StructField("vec_id", LongType(), True),
-            StructField("score", DoubleType(), True),
-            StructField("rk", IntegerType(), True),
-        ]
-    )
-    out_rows = []
-    for j, (aid, _) in enumerate(anchors):
-        ranked = sorted(visited[j].items(), key=_rank_key)[:_GS_K]
-        out_rows.extend(
-            (aid, vid, s, i + 1) for i, (vid, s) in enumerate(ranked)
-        )
-    return spark.createDataFrame(out_rows, schema=out_schema).orderBy(
-        "aid", "rk"
-    )
+            (aid, vid, s, i + 1)
+            for aid, ranked in _walk_layered(spark, ix, n_anchors)
+            for i, (vid, s) in enumerate(ranked)
+        ],
+        schema="aid bigint, vec_id bigint, score double, rk int",
+    ).orderBy("aid", "rk")

@@ -119,8 +119,9 @@ def test_interrupted_swap_is_recovered(spark, built):
 
 
 def test_serve_score_col_matches_arrow_scorer(spark):
-    """The serve-side scoring expression (`_anchor_score_col`: the JVM
-    HOF chain wrapped with the Arrow scorer's NULL contract) must equal
+    """The serve-side scoring expression (`_anchor_score_multi_col`: the
+    JVM HOF chain wrapped with the Arrow scorer's NULL contract, here in
+    its one-anchor case, element 0) must equal
     `round(arrow_scorer, 6)` on every corpus vector AND on the corner
     inputs the wrapper exists for — NaN element, Inf element, zero
     vector, null element, null array — the property that lets the
@@ -136,7 +137,7 @@ def test_serve_score_col_matches_arrow_scorer(spark):
 
     from esco_neo4j_spark.operators.similarity import _anchor_cosine_pudf
     from esco_neo4j_spark.plans.vector_queries import _anchor_vec
-    from esco_neo4j_spark.sources.ann_index import _anchor_score_col
+    from esco_neo4j_spark.sources.ann_index import _anchor_score_multi_col
 
     from esco_neo4j_spark.catalog import load_tables
 
@@ -167,7 +168,7 @@ def test_serve_score_col_matches_arrow_scorer(spark):
         emb.unionByName(corners)
         .select(
             "vec_id",
-            _anchor_score_col(anchor).alias("a"),
+            _anchor_score_multi_col([(0, anchor)])[0].alias("a"),
             F.round(pudf(F.col("embedding")), 6).alias("b"),
         )
         .collect()
@@ -249,6 +250,40 @@ def test_filtered_serve_returns_only_matching_labels(spark, built):
     assert scores == sorted(scores, reverse=True)
 
 
+def test_serve_refuses_corpus_without_anchor_embedding(spark, tmp_path):
+    """The single serve's query vector is vec_id 0's embedding. When the
+    corpus stores a null there, vec_id 0 is absent from the index's
+    vectors table, and serving must raise instead of silently anchoring
+    the walk on the next-lowest stored id."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from esco_neo4j_spark.sources.ann_index import (
+        _open_index,
+        ensure_layered_index,
+        serve_layered,
+    )
+
+    t = pq.read_table(os.path.join(SF_DIR, "embeddings.parquet"))
+    col = t.schema.get_field_index("embedding")
+    is0 = pc.equal(t["vec_id"], 0)
+    assert pc.any(is0).as_py(), "corpus has no vec_id 0"
+    nulled = pc.if_else(
+        is0, pa.scalar(None, type=t.schema.field(col).type), t["embedding"]
+    )
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pq.write_table(
+        t.set_column(col, t.schema.field(col), nulled),
+        str(sf / "embeddings.parquet"),
+    )
+    idx = ensure_layered_index(spark, str(sf), str(tmp_path / "idx"))
+    assert _open_index(spark, idx).seed_ids[0] != 0
+    with pytest.raises(ValueError, match="vec_id=0"):
+        serve_layered(spark, str(sf), idx)
+
+
 def test_built_artifact_has_no_fs_sidecars(built):
     """The build strips Hadoop's write-time sidecars (`.*.crc`,
     `_SUCCESS`) from the swapped artifact: they double the filesystem
@@ -280,7 +315,6 @@ def test_serve_reads_are_partition_pruned(spark, built):
     from esco_neo4j_spark.sources.ann_index import (
         _bucket_py,
         _open_index,
-        _pruned_edges,
         _pruned_src_edges,
         _pruned_vectors,
     )
@@ -290,7 +324,7 @@ def test_serve_reads_are_partition_pruned(spark, built):
     some_ids = ix.seed_ids[:3]
     buckets = sorted({_bucket_py(i, nb) for i in some_ids})
 
-    edges = _pruned_edges(spark, ix, 1, some_ids)
+    edges = _pruned_src_edges(spark, ix, 1, some_ids)
     edge_plan = edges._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in edge_plan
     assert "pbucket" in edge_plan.split("PartitionFilters", 1)[1].split(
@@ -316,14 +350,6 @@ def test_serve_reads_are_partition_pruned(spark, built):
     assert "vbucket" in vec_plan.split("PartitionFilters", 1)[1].split(
         "]", 1
     )[0], vec_plan
-
-    # the batched serve's src-bearing edge read must prune identically
-    src_plan = _pruned_src_edges(
-        spark, ix, 1, some_ids
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "pbucket" in src_plan.split("PartitionFilters", 1)[1].split(
-        "]", 1
-    )[0], src_plan
 
 
 def test_files_manifest_covers_artifact_and_pins_seeds(spark, built):

@@ -38,6 +38,7 @@ def main() -> None:
 
     orig_ck = gmod._checkpoint
     gmod._checkpoint = lambda df: df
+    spark = None
     try:
         spark = get_spark("capture_ngram_fallback")
         df = dmod.ngram_jaccard_pairs(
@@ -54,13 +55,14 @@ def main() -> None:
             "budget forced 0 (witness-grouped branch), checkpoints patched "
             "to identity so the full distributed plan is visible ==\n"
         )
-        os.makedirs(os.path.dirname(args.out), exist_ok=True)
+        os.makedirs(os.path.dirname(args.out) or ".", exist_ok=True)
         with open(args.out, "w") as f:
             f.write(header + explain_str(df) + "\n")
         print(f"wrote {args.out}")
-        spark.stop()
     finally:
         gmod._checkpoint = orig_ck
+        if spark is not None:
+            spark.stop()
 
 
 if __name__ == "__main__":
